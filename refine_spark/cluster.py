@@ -3,8 +3,11 @@
 SURVEY.md §2.5 A4/A5/A7. The reference's recursive union-find
 (/root/reference/src/commands/dupes.rs:186-216) does not distribute; the
 Spark-native equivalent is iterative min-label propagation over an edge
-DataFrame with a convergence check and `localCheckpoint()` per iteration
-to cut lineage (north rule: "union-find over edge DataFrames").
+DataFrame (north rule: "union-find over edge DataFrames"). Each round
+also hooks the larger endpoint label onto the smaller one and then
+jumps every label to its label's label, so a component of diameter d
+converges in O(log d) rounds rather than d; `localCheckpoint()` per
+round cuts lineage, and a loop that reaches `max_iter` raises.
 
 Per-cluster average similarity is recomputed from the surviving edge set
 after convergence — equivalent to the reference's (sum, count) merge
@@ -80,23 +83,32 @@ def connected_components(
     salt_buckets: int = 16,
     driver_cutover: int = 2_000_000,
     driver_max_bytes: int = 768 * 1024 * 1024,
+    metrics: list[dict] | None = None,
 ) -> DataFrame:
     """Label each vertex of the undirected edge set (src, dst) with the
     minimum vertex id reachable from it. Returns (id, cluster_id).
 
     Adaptive strategy: edge sets under `driver_cutover` collect to the
     driver for an O(E a(E)) union-find (near-dup edges are sparse; the
-    distributed loop's fixed per-iteration latency would dominate).
-    Larger sets run iterative min-label propagation — one join + one
-    salted aggregation per round, checkpointed to cut lineage — which is
-    the 10^12-scale path. Duplicate-cluster diameters are small, so the
-    loop converges in a few rounds.
+    distributed loop's fixed per-round latency would dominate). Larger
+    sets run the 10^12-scale path: min-label propagation with root
+    hooking and pointer jumping — two label joins, one salted
+    aggregation and one pointer-jump join per round, checkpointed to cut
+    lineage. A chain of d hops converges in O(log d) rounds; if the loop
+    still changes labels after `max_iter` rounds it raises RuntimeError
+    instead of returning partial labels.
+
+    `metrics`, when given, receives one dict: the path taken (`driver`
+    or `distributed`), the deduplicated edge count and the number of
+    distributed rounds (0 on the driver path). It is output only.
     """
     dedup = edges.select("src", "dst").dropDuplicates(["src", "dst"])
     # one driver job decides the cutover: count + byte estimate fused
     # (the round-3/4 limit(256).collect() sampling pass is gone)
     n_edges, est_bytes = count_and_est_bytes(dedup)
     if n_edges <= driver_cutover and est_bytes <= driver_max_bytes:
+        if metrics is not None:
+            metrics.append({"path": "driver", "edges": n_edges, "rounds": 0})
         spark = edges.sparkSession
         return _driver_union_find(dedup.toPandas(), id_col, spark)
 
@@ -116,29 +128,62 @@ def connected_components(
     # string would coerce the whole union to strings, silently switching
     # min() to lexicographic order for int64 doc-id labels
     label_type = dict(dedup.dtypes)["src"]
-    for _ in range(max_iter):
-        # propagate: each vertex learns its neighbors' labels; the vertex's
-        # own row is marked so the aggregation yields (new_label, old_label)
-        # in ONE pass — no separate convergence join
-        msgs = sym.join(labels, sym.b == labels.id).select(
-            F.col("a").alias("id"), F.col("label"), F.lit(None).cast(label_type).alias("own")
+    # Invariant: label(v) <= v and label(v) lies in v's component. Labels
+    # only decrease, so the fixed point is the component minimum.
+    for rounds in range(1, max_iter + 1):
+        la = labels.select(F.col("id").alias("a"), F.col("label").alias("la"))
+        lb = labels.select(F.col("id").alias("b"), F.col("label").alias("lb"))
+        # each edge whose endpoint labels differ sends the smaller label
+        # to the other endpoint (propagation) AND to that endpoint's
+        # label vertex (hooking, which merges whole label trees at once)
+        msg = F.explode(
+            F.array(
+                F.struct(F.col("b").alias("id"), F.col("la").alias("label")),
+                F.struct(F.col("lb").alias("id"), F.col("la").alias("label")),
+            )
+        ).alias("m")
+        msgs = (
+            sym.join(la, "a").join(lb, "b")
+            .filter(F.col("la") < F.col("lb"))
+            .select(msg)
+            .select("m.id", "m.label", F.lit(None).cast(label_type).alias("own"))
         )
+        # the vertex's own row is marked so the aggregation yields
+        # (new_label, old_label) in ONE pass — no separate convergence join
         own = labels.select("id", "label", F.col("label").alias("own"))
-        candidates = msgs.union(own)
         # two-stage salted min to tame hub-vertex skew
-        new_labels = (
-            candidates.withColumn("salt", F.pmod(F.xxhash64("label"), F.lit(salt_buckets)))
+        hooked = (
+            msgs.union(own)
+            .withColumn("salt", F.pmod(F.xxhash64("label"), F.lit(salt_buckets)))
             .groupBy("id", "salt")
             .agg(F.min("label").alias("label"), F.min("own").alias("own"))
             .groupBy("id")
             .agg(F.min("label").alias("label"), F.min("own").alias("own"))
         ).localCheckpoint(eager=True)
+        # pointer jump: label <- label(label), halving every label path.
+        # The join reads `hooked` on both sides; the checkpoint above keeps
+        # the edge joins and the salted aggregate from running twice.
+        parent = hooked.select(F.col("id").alias("label"), F.col("label").alias("jumped"))
+        new_labels = (
+            hooked.join(parent, "label")
+            .select("id", F.col("jumped").alias("label"), "own")
+            .localCheckpoint(eager=True)
+        )
         changed = new_labels.filter(F.col("label") != F.col("own")).limit(1).count()
         labels = new_labels.select("id", "label")
         if changed == 0:
-            break
+            if metrics is not None:
+                metrics.append(
+                    {"path": "distributed", "edges": n_edges, "rounds": rounds}
+                )
+            return labels.select(
+                F.col("id").alias(id_col), F.col("label").alias("cluster_id")
+            )
 
-    return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
+    raise RuntimeError(
+        f"connected_components did not converge: labels still changed "
+        f"after {max_iter} rounds (max_iter={max_iter}, {n_edges} edges)"
+    )
 
 
 def cluster_stats(

@@ -254,8 +254,19 @@ def run_dedup(
         all_edges = all_edges.unionByName(e)
     all_edges = runner.run("edges", lambda: all_edges, reused=True)
 
+    t0 = time.monotonic()
+    cc_stats: list[dict] = []
     labels = connected_components(
-        all_edges, id_col="doc_id", salt_buckets=cfg.salt_buckets
+        all_edges, id_col="doc_id", salt_buckets=cfg.salt_buckets, metrics=cc_stats
+    )
+    runner.metrics.append(
+        {
+            "stage": "cc",
+            "rows": cc_stats[0]["edges"],
+            "partitions": -1,
+            "wall_sec": round(time.monotonic() - t0, 3),
+            "extra": f"cc path={cc_stats[0]['path']} rounds={cc_stats[0]['rounds']}",
+        }
     )
     stats = cluster_stats(all_edges, labels, id_col="doc_id")
     with_stats = labels.join(stats, "cluster_id").select(

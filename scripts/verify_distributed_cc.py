@@ -1,15 +1,18 @@
 """At-scale exercise of the DISTRIBUTED connected-components path.
 
-The salted min-label loop (cluster.py) is the 10^12-scale path, but the
-adaptive cutover means ordinary test corpora never reach it (their edge
-sets fit the driver). This script builds a planted edge set big enough
-to cross the cutover naturally, runs BOTH paths on the same input, and
-asserts label equality — then logs walls/rounds for SCALE.md.
+The salted min-label loop with root hooking and pointer jumping
+(cluster.py) is the 10^12-scale path, but the adaptive cutover means
+ordinary test corpora never reach it (their edge sets fit the driver).
+This script builds a planted edge set big enough to cross the cutover
+naturally, runs BOTH paths on the same input, and asserts label
+equality. Its JSON line reports both walls, their ratio and the
+distributed round count, for SCALE.md.
 
 Planted structure mirrors real near-dup graphs: mostly small star
-components (duplicate clusters have tiny diameter — the loop's
-convergence assumption) plus a tail of short chains (diameter ~8) to
-exercise multi-round propagation, plus singletons via edge-free gaps.
+components plus a tail of chains (diameter 10) that need several
+rounds, plus singletons via edge-free gaps. The loop's round count
+grows with log(diameter), so it does not depend on diameters being
+small.
 
 Usage:
   SPARK_GRAFT_CC_EDGES=10000000 python scripts/verify_distributed_cc.py
@@ -61,21 +64,26 @@ def main() -> None:
     print(f"planted edges: {n_edges} over ~{n_blocks} blocks", file=sys.stderr)
 
     # ground truth: every vertex's component minimum is its block base
-    def run(label: str, **kw) -> tuple[float, int]:
+    def run(label: str, **kw) -> tuple[float, int, int]:
+        stats: list[dict] = []
         t0 = time.monotonic()
-        labels = connected_components(edges, id_col="v", **kw)
+        labels = connected_components(edges, id_col="v", metrics=stats, **kw)
         bad = labels.filter(
             F.col("cluster_id") != (F.col("v") - F.pmod(F.col("v"), 1000))
         ).count()
         wall = time.monotonic() - t0
-        print(f"{label}: wall={wall:.1f}s wrong_labels={bad}", file=sys.stderr)
-        return wall, bad
+        rounds = stats[0]["rounds"]
+        print(
+            f"{label}: wall={wall:.1f}s rounds={rounds} wrong_labels={bad}",
+            file=sys.stderr,
+        )
+        return wall, bad, rounds
 
     # forced distributed: cutover 0 means the salted min-label loop runs
     # regardless of size — the code path a 1000-executor job would take
-    wall_dist, bad_dist = run("distributed", driver_cutover=0)
+    wall_dist, bad_dist, rounds = run("distributed", driver_cutover=0)
     # driver union-find on the same input (raised caps to allow collect)
-    wall_drv, bad_drv = run(
+    wall_drv, bad_drv, _ = run(
         "driver", driver_cutover=2 * n_edges, driver_max_bytes=4 << 30
     )
 
@@ -90,6 +98,8 @@ def main() -> None:
                 "edges": n_edges,
                 "wall_distributed_sec": round(wall_dist, 1),
                 "wall_driver_sec": round(wall_drv, 1),
+                "distributed_over_driver": round(wall_dist / wall_drv, 2),
+                "rounds": rounds,
                 "wrong_labels": 0,
                 "loadavg_1m": round(os.getloadavg()[0], 2),
             }

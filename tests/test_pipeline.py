@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import random
+
+import pytest
 from pyspark.sql import functions as F
 
 from refine_spark import synth
@@ -164,6 +167,95 @@ def test_distributed_cc_matches_driver_path(spark):
     }
     assert fast == dist
     assert fast["c"] == "a" and fast["f"] == "a" and fast["e"] == "d"
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_distributed_cc_long_chain_converges(spark, id_type):
+    """A chain far longer than `max_iter` hops must converge on the forced
+    distributed path at the default `max_iter`: root hooking plus pointer
+    jumping needs O(log d) rounds, where one-hop propagation needed d + 1.
+    One frame carries two 150-hop chains: ids sorted along the chain (the
+    minimum at one end) and shuffled. A too-small `max_iter` raises
+    instead of returning partial labels."""
+    import numpy as np
+
+    from refine_spark.cluster import _numpy_min_label, connected_components
+
+    chains = [list(range(1_000, 1_151)), random.Random(0).sample(range(5_000, 5_151), 151)]
+    src = [v for c in chains for v in c[:-1]]
+    dst = [v for c in chains for v in c[1:]]
+    if id_type == "string":  # zero-padded: lexicographic == numeric order
+        src, dst = [f"v{v:06d}" for v in src], [f"v{v:06d}" for v in dst]
+    edges = spark.createDataFrame(list(zip(src, dst)), f"src {id_type}, dst {id_type}")
+
+    metrics: list[dict] = []
+    got = {
+        r["url"]: r["cluster_id"]
+        for r in connected_components(edges, driver_cutover=0, metrics=metrics).collect()
+    }
+    ids, labels = _numpy_min_label(np.array(src), np.array(dst))
+    assert got == dict(zip(ids.tolist(), labels.tolist()))
+    assert len(set(got.values())) == 2
+    assert metrics[0]["path"] == "distributed"
+    assert metrics[0]["rounds"] <= 12, metrics  # ~log2(150) + 1, not 151
+
+    if id_type == "long":
+        with pytest.raises(RuntimeError, match=r"after 2 rounds \(max_iter=2"):
+            connected_components(edges, driver_cutover=0, max_iter=2)
+
+
+def test_cc_random_graph_parity(spark):
+    """Driver and distributed CC both equal `_numpy_min_label` on ~50
+    seeded random graphs (stars, chains, cliques, stars hanging off
+    chains), each on its own disjoint, shuffled id range that spans
+    negative int64s. All graphs share one edge frame, so the distributed
+    path runs once."""
+    import numpy as np
+
+    from refine_spark.cluster import _numpy_min_label, connected_components
+
+    rng = np.random.default_rng(7)
+    src, dst = [], []
+    for g in range(50):
+        kind, n = g % 4, int(rng.integers(2, 40))
+        v = rng.permutation(n + 40) + (g - 25) * 1_000  # disjoint per graph
+        if kind == 0:  # star
+            s, d = np.full(n - 1, v[0]), v[1:n]
+        elif kind == 1:  # chain
+            s, d = v[: n - 1], v[1:n]
+        elif kind == 2:  # clique on at most 8 vertices
+            i, j = np.triu_indices(min(n, 8), 1)
+            s, d = v[i], v[j]
+        else:  # chain of n hops, star of 40 leaves on a random chain vertex
+            hub = v[int(rng.integers(0, n + 1))]
+            s = np.concatenate([v[:n], np.full(39, hub)])
+            d = np.concatenate([v[1 : n + 1], v[n + 1 : n + 40]])
+        flip = rng.random(len(s)) < 0.5
+        src.append(np.where(flip, d, s))
+        dst.append(np.where(flip, s, d))
+    src, dst = np.concatenate(src), np.concatenate(dst)
+    edges = spark.createDataFrame(
+        list(zip(src.tolist(), dst.tolist())), "src long, dst long"
+    )
+    ids, labels = _numpy_min_label(src, dst)
+    expected = dict(zip(ids.tolist(), labels.tolist()))
+    for cutover in (2_000_000, 0):
+        got = {
+            r["url"]: r["cluster_id"]
+            for r in connected_components(edges, driver_cutover=cutover).collect()
+        }
+        assert got == expected, f"driver_cutover={cutover}"
+
+
+def test_lazy_run_records_cc_metrics(spark):
+    """The pipeline's final CC records its path and round count as a
+    metrics row in lazy (bench) mode too."""
+    docs, _ = synth.to_spark(spark, n_docs=100)
+    result = run_dedup(spark, docs, passes=("exact",), lazy=True)
+    rows = [m for m in result["metrics"] if m["stage"] == "cc"]
+    assert len(rows) == 1, result["metrics"]
+    assert rows[0]["extra"] == "cc path=driver rounds=0"
+    assert rows[0]["rows"] >= 0
 
 
 def test_checkpoint_resume(spark, tmp_path):
