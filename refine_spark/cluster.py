@@ -173,12 +173,8 @@ def connected_components(
         labels = new_labels.select("id", "label")
         if changed == 0:
             if metrics is not None:
-                metrics.append(
-                    {"path": "distributed", "edges": n_edges, "rounds": rounds}
-                )
-            return labels.select(
-                F.col("id").alias(id_col), F.col("label").alias("cluster_id")
-            )
+                metrics.append({"path": "distributed", "edges": n_edges, "rounds": rounds})
+            return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
 
     raise RuntimeError(
         f"connected_components did not converge: labels still changed "

@@ -259,13 +259,14 @@ def run_dedup(
     labels = connected_components(
         all_edges, id_col="doc_id", salt_buckets=cfg.salt_buckets, metrics=cc_stats
     )
+    (cc,) = cc_stats
     runner.metrics.append(
         {
             "stage": "cc",
-            "rows": cc_stats[0]["edges"],
+            "rows": cc["edges"],
             "partitions": -1,
             "wall_sec": round(time.monotonic() - t0, 3),
-            "extra": f"cc path={cc_stats[0]['path']} rounds={cc_stats[0]['rounds']}",
+            "extra": f"cc path={cc['path']} rounds={cc['rounds']}",
         }
     )
     stats = cluster_stats(all_edges, labels, id_col="doc_id")
